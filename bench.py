@@ -24,8 +24,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from kg_microbe_spark.session import get_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 # Mixed JVM+Python stages on this host cliff above 16 threads (each Arrow
 # stage task occupies a JVM thread AND a Python worker); the pipeline
 # throughput section therefore runs at min(CPUS, 16) — reported in the
@@ -51,19 +53,6 @@ BENCH_QUERIES = [
     "binned_traits",
     "simhash_buckets",
 ]
-
-
-def make_spark(cores: int, shuffle_partitions: int | None = None):
-    from kg_microbe_spark.session import get_spark
-
-    # shuffle partitions sized to the parallelism level (2x cores): at
-    # local[2], 16 partitions mean 8 scheduling waves per stage — pure
-    # fixed cost that poisons the scaling comparison.
-    return get_spark(
-        app_name=f"bench_local_{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=shuffle_partitions or max(cores * 2, 8),
-    )
 
 
 def materialize_pages(spark, n_pages: int, path: str, partitions: int):
@@ -169,7 +158,7 @@ def scaling_run(pages_path: str, n_pages: int, warm_path: str | None = None) -> 
     n_triples = 0
     for rnd in range(reps):
         for cores in SCALING_CORES:
-            spark = make_spark(cores)
+            spark = get_spark(app_name="bench", master=f"local[{cores}]")
             spark.sparkContext.setLogLevel("ERROR")
             run_pipeline_once(spark, warm_path or pages_path)  # warm-up, every session
             t_busy0, t_idle0, t_steal0 = _cpu_ticks()
@@ -375,7 +364,7 @@ def main():
     scaling_path = os.path.join(tmp, "pages_scaling")
     try:
         if args.scaling_only:
-            spark = make_spark(CPUS)
+            spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
             spark.sparkContext.setLogLevel("ERROR")
             materialize_pages(spark, args.pages, pages_path, partitions=CPUS * 4)
             materialize_pages(spark, args.scaling_pages, scaling_path, partitions=64)
@@ -388,7 +377,7 @@ def main():
                 "per_round": scaling["per_round_efficiency"],
             }}))
             return
-        spark = make_spark(CPUS)
+        spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
         spark.sparkContext.setLogLevel("ERROR")
         materialize_pages(spark, args.pages, pages_path, partitions=CPUS * 4)
         if args.scaling:
@@ -399,7 +388,7 @@ def main():
         import statistics
 
         reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-        spark = make_spark(PIPELINE_CORES)
+        spark = get_spark(app_name="bench", master=f"local[{PIPELINE_CORES}]")
         spark.sparkContext.setLogLevel("ERROR")
         # The warm-up in a FRESH session is exactly the cold run (empty
         # dim/matcher caches, cold codegen, first file listing) — time it

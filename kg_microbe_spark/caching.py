@@ -38,7 +38,8 @@ from typing import Any, Callable, Optional
 
 class SessionVersionCache:
     def __init__(self, max_per_app: int = 4, on_evict: Optional[Callable[[Any], None]] = None):
-        assert max_per_app >= 1
+        if max_per_app < 1:
+            raise ValueError(f"max_per_app must be >= 1, got {max_per_app}")
         self.max_per_app = max_per_app
         self.on_evict = on_evict
         self._data: "OrderedDict[tuple, tuple]" = OrderedDict()  # (app,key) → (value, fp)
@@ -91,6 +92,19 @@ class SessionVersionCache:
                 evicted.append(self._data.pop(oldest)[0])
         for v in evicted:  # release outside the lock — unpersist can block
             self._evict_value(v)
+
+    def get_or_build(self, app_id: str, key: Optional[str], fingerprint: str, build: Callable[[], Any]) -> Any:
+        """The cached value for (app_id, key) if its fingerprint matches,
+        else ``build()`` — cached under the key unless the key is None.
+        ``build`` runs outside the lock, so a slow build never blocks other
+        keys (see above on duplicate builds)."""
+        if key is None:
+            return build()
+        value = self.get(app_id, key, fingerprint)
+        if value is None:
+            value = build()
+            self.put(app_id, key, value, fingerprint)
+        return value
 
     def __len__(self) -> int:
         return len(self._data)

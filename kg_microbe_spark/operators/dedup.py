@@ -202,7 +202,8 @@ def minhash_lsh_candidates(
     self-join on (band_idx, band_hash) → distinct pairs (a < b), with the
     estimated Jaccard = fraction of matching signature positions.
     """
-    assert num_hashes % bands == 0
+    if bands < 1 or num_hashes % bands != 0:
+        raise ValueError(f"num_hashes ({num_hashes}) must be a positive multiple of bands ({bands})")
     rows_per_band = num_hashes // bands
     sig = df.select(
         F.col(id_col).alias("doc"),
@@ -256,7 +257,8 @@ def simhash_col(shingles: Column, bits: int = 32, portable: bool = False) -> Col
     DuckDB oracle can reproduce the value exactly (bits must be ≤ 60);
     xxhash64 stays the default — it is ~3× cheaper per shingle."""
     if portable:
-        assert bits <= 60, "portable hash provides 60 usable bits"
+        if bits > 60:
+            raise ValueError(f"portable hash provides 60 usable bits, got bits={bits}")
         hash_fn = portable_hash60_col
     else:
         hash_fn = F.xxhash64
@@ -289,8 +291,8 @@ def simhash_table(
     referenced ``bits`` times. Values identical (same per-bit aggregate
     over the same hashes — see test_operators.py)."""
     hash_fn = portable_hash60_col if portable else F.xxhash64
-    if portable:
-        assert bits <= 60, "portable hash provides 60 usable bits"
+    if portable and bits > 60:
+        raise ValueError(f"portable hash provides 60 usable bits, got bits={bits}")
     staged = df.select(
         F.col(id_col).alias("doc"),
         F.transform(shingles_col(F.col(text_col), shingle_n), lambda s: hash_fn(s)).alias("_hs"),

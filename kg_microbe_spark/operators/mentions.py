@@ -59,18 +59,17 @@ from kg_microbe_spark.caching import SessionVersionCache, destroy_broadcast
 _MATCHER_CACHE = SessionVersionCache(max_per_app=4, on_evict=destroy_broadcast)
 
 
-def _matcher_broadcast(spark, name_index: DataFrame, cache_key: str | None):
-    app_id = spark.sparkContext.applicationId
-    fp = name_index.schema.simpleString()
-    if cache_key is not None:
-        bc = _MATCHER_CACHE.get(app_id, cache_key, fp)
-        if bc is not None:
-            return bc
-    patterns: List[str] = [r.term_norm for r in name_index.select("term_norm").distinct().collect()]
-    bc = spark.sparkContext.broadcast(build_matcher(patterns))
-    if cache_key is not None:
-        _MATCHER_CACHE.put(app_id, cache_key, bc, fp)
-    return bc
+def _matcher_broadcast(spark, name_index: DataFrame, cache_key: str | None, fingerprint: str = ""):
+    def build():
+        patterns: List[str] = [r.term_norm for r in name_index.select("term_norm").distinct().collect()]
+        return spark.sparkContext.broadcast(build_matcher(patterns))
+
+    return _MATCHER_CACHE.get_or_build(
+        spark.sparkContext.applicationId,
+        cache_key,
+        f"{name_index.schema.simpleString()}|{fingerprint}",
+        build,
+    )
 
 
 def _scan_with_matcher(
@@ -79,6 +78,7 @@ def _scan_with_matcher(
     candidates_only: bool,
     matcher_cache_key: str | None = None,
     passthrough_cols: Sequence[str] = (),
+    matcher_fingerprint: str = "",
 ) -> DataFrame:
     """The single matcher-scan implementation — batch AND streaming callers
     share it (streaming passes ``passthrough_cols=("warc_ts",)`` to carry
@@ -88,7 +88,7 @@ def _scan_with_matcher(
     from pyspark.sql.types import StructType
 
     spark = extracted.sparkSession
-    bc = _matcher_broadcast(spark, name_index, matcher_cache_key)
+    bc = _matcher_broadcast(spark, name_index, matcher_cache_key, matcher_fingerprint)
     passthrough_cols = tuple(passthrough_cols)
     out_schema = StructType(
         MENTIONS_SCHEMA.fields + [extracted.schema[c] for c in passthrough_cols]
@@ -148,6 +148,7 @@ def scan_mentions(
     max_broadcast_patterns: int | None = MAX_BROADCAST_PATTERNS,
     matcher_cache_key: str | None = None,
     passthrough_cols: Sequence[str] = (),
+    matcher_fingerprint: str = "",
 ) -> DataFrame:
     """extracted(url,text,…) × name_index → mentions(url, surface,
     term_norm, start, end[, *passthrough_cols]). Offsets refer to the
@@ -160,6 +161,9 @@ def scan_mentions(
     ``matcher_cache_key``: optional dictionary-version key enabling
     session-scoped reuse of the built+broadcast matcher (see
     _MATCHER_CACHE); only pass it when the name index is version-stable.
+    ``matcher_fingerprint`` names what else the index was built from (the
+    pipeline passes its stopwords): a cached matcher recorded under a
+    different fingerprint is discarded and rebuilt.
 
     ``passthrough_cols``: extra input columns carried through per match
     (streaming uses this for event time — one scan implementation for
@@ -178,6 +182,7 @@ def scan_mentions(
         candidates_only=False,
         matcher_cache_key=matcher_cache_key,
         passthrough_cols=passthrough_cols,
+        matcher_fingerprint=matcher_fingerprint,
     )
 
 
@@ -190,7 +195,8 @@ def scan_mentions_sharded(extracted: DataFrame, name_index: DataFrame, shards: i
     output to :func:`scan_mentions` (property-tested); costs K text passes
     and one extra (url-keyed) shuffle, in exchange for a K× smaller
     broadcast/build peak."""
-    assert shards >= 1
+    if shards < 1:
+        raise ValueError(f"shards must be >= 1, got {shards}")
     cands = None
     for i in range(shards):
         shard = name_index.filter(F.pmod(F.xxhash64("term_norm"), F.lit(shards)) == i)

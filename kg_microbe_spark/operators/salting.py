@@ -60,7 +60,8 @@ def salted_join(
     the merge/link joins of SURVEY §2.3 (J1/J6) under hub entities."""
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    assert salt_buckets >= 1
+    if salt_buckets < 1:
+        raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
     on = list(on)
     overlap = set(facts.columns) & set(dim.columns) - set(on)
     if overlap:
@@ -93,7 +94,8 @@ def salted_collect_set(
     arrays — the overhead is a constant factor on the DIMENSION-sized
     phase-2 input, not on the fact-table fan-in.
     """
-    assert salt_buckets >= 1
+    if salt_buckets < 1:
+        raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
     salt = F.pmod(F.xxhash64(F.col(value_col).cast("string")), F.lit(salt_buckets))
     phase1_aggs = [F.collect_set(value_col).alias("_part")]
     if count_col:

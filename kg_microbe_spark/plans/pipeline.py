@@ -64,46 +64,29 @@ class PipelineResult:
 _DIM_CACHE = SessionVersionCache(max_per_app=16)
 
 
-def _localize(df: DataFrame, cache_key: Optional[str] = None) -> DataFrame:
-    """Collect a small dimension frame and rebuild it as a LocalRelation
-    (constant-folded into every consuming plan; no recompute, free
-    broadcast). Only valid for genuinely small frames. Cached per
-    (session, cache_key) when a key is given — see _DIM_CACHE."""
-    spark = df.sparkSession
-    app_id = spark.sparkContext.applicationId
-    fp = df.schema.simpleString()
-    if cache_key is not None:
-        hit = _DIM_CACHE.get(app_id, cache_key, fp)
-        if hit is not None:
-            return hit
-    rows = df.collect()
-    out = spark.createDataFrame(rows, df.schema)
-    if cache_key is not None:
-        _DIM_CACHE.put(app_id, cache_key, out, fp)
-    return out
+def _localize(spark: SparkSession, build, fingerprint: str, cache_key: Optional[str]) -> DataFrame:
+    """Collect the small dimension frame ``build()`` returns and rebuild it
+    as a LocalRelation (constant-folded into every consuming plan; no
+    recompute, free broadcast). Only valid for genuinely small frames.
+    Cached per (session, cache_key) when a key is given — see _DIM_CACHE.
+
+    ``build`` is a thunk: on a cache hit the dimension plan is never even
+    constructed (building the name-index / synonym-enrichment *plans* costs
+    0.2-0.4 s of driver py4j round trips per pipeline invocation). The
+    staleness fingerprint is everything the dimension is built from besides
+    the lexicon rows: the lexicon's schema, plus the stopwords for the
+    stopword-filtered dimensions — a key reused across a change of either
+    is discarded and rebuilt."""
+
+    def collect_local() -> DataFrame:
+        df = build()
+        return spark.createDataFrame(df.collect(), df.schema)
+
+    return _DIM_CACHE.get_or_build(spark.sparkContext.applicationId, cache_key, fingerprint, collect_local)
 
 
-def _localize_lazy(spark: SparkSession, build, source_fp: str, cache_key: Optional[str]) -> DataFrame:
-    """_localize with a THUNK (optimization r06): on a cache hit the
-    dimension plan is never even constructed. Measured: building the
-    name-index / synonym-enrichment *plans* costs 0.2-0.4 s of driver py4j
-    round trips per pipeline invocation — paid on every warm run when the
-    eagerly-evaluated argument form is used, despite the hit. The
-    staleness fingerprint is the SOURCE frame's schema plus the cache key
-    (the dim schema is a pure function of builder + source schema), so a
-    key reused across a lexicon schema change still misses exactly as
-    before."""
-    app_id = spark.sparkContext.applicationId
-    if cache_key is not None:
-        hit = _DIM_CACHE.get(app_id, cache_key, source_fp)
-        if hit is not None:
-            return hit
-    df = build()
-    rows = df.collect()
-    out = spark.createDataFrame(rows, df.schema)
-    if cache_key is not None:
-        _DIM_CACHE.put(app_id, cache_key, out, source_fp)
-    return out
+def _stop_cfg(stopwords: Sequence[str]) -> str:
+    return f"stop={','.join(sorted(stopwords))}"
 
 
 def _predicate_dims(spark: SparkSession) -> Tuple[DataFrame, DataFrame]:
@@ -144,7 +127,10 @@ def _collective_link(
     from kg_microbe_spark.operators.lexicon import build_candidate_index
 
     cand_index = _localize(
-        build_candidate_index(lexicon, stopwords), _k("cand_index")
+        lexicon.sparkSession,
+        lambda: build_candidate_index(lexicon, stopwords),
+        f"{lexicon.schema.simpleString()}|{_stop_cfg(stopwords)}",
+        _k("cand_index"),
     )
     agg_m = mentions.groupBy("url", "term_norm").agg(
         F.count(F.lit(1)).alias("n_mentions")
@@ -201,8 +187,9 @@ def run_pipeline(
     with the run config (tau, stopwords, pipeline version) and recorded per
     stage — a resume after the inputs or config changed recomputes instead
     of reading stale checkpoints."""
+    stop_cfg = _stop_cfg(stopwords)
     config_fp = (
-        f"v{PIPELINE_VERSION}|tau={tau}|stop={','.join(sorted(stopwords))}"
+        f"v{PIPELINE_VERSION}|tau={tau}|{stop_cfg}"
         f"|coll={int(collective_linking)}|in={input_fingerprint}"
     )
 
@@ -226,17 +213,18 @@ def run_pipeline(
     # dimension data up front (bacdive.py:224-321).
     _k = (lambda part: f"{dim_cache_key}/{part}") if dim_cache_key else (lambda part: None)
     lex_fp = lexicon.schema.simpleString()
-    name_index = _localize_lazy(
-        spark, lambda: build_name_index(lexicon, stopwords), lex_fp, _k("name_index")
+    stop_fp = f"{lex_fp}|{stop_cfg}"
+    name_index = _localize(
+        spark, lambda: build_name_index(lexicon, stopwords), stop_fp, _k("name_index")
     )
-    xref_routing = _localize_lazy(
+    xref_routing = _localize(
         spark, lambda: build_xref_routing(lexicon), lex_fp, _k("xref_routing")
     )
     # N8 synonym enrichment — the collect-state aggregation runs through
     # salted_collect_set (lexicon.py) so a hub canonical's surface fan-in
     # never funnels through one reducer; the result is dimension-sized and
     # localized like the other lexicon dims.
-    syn_sets = _localize_lazy(
+    syn_sets = _localize(
         spark,
         lambda: enrich_synonyms(lexicon).select(
             F.col("curie").alias("id"), F.array_join("synonyms", "|").alias("_syn")
@@ -251,7 +239,11 @@ def run_pipeline(
     mentions = stage(
         "s3_mentions",
         lambda: scan_mentions(
-            en_pages, name_index, max_broadcast_patterns=None, matcher_cache_key=_k("matcher")
+            en_pages,
+            name_index,
+            max_broadcast_patterns=None,
+            matcher_cache_key=_k("matcher"),
+            matcher_fingerprint=stop_cfg,
         ),
     )
 

@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Single place where execution knobs live so tests / bench / driver all get
-the same plan behavior. Tuned for the patterns this engine relies on
+The only place a SparkSession is configured: tests, scripts, bench and
+the spark-submit entry point all build their session here, so every run
+gets the same plan behavior. Tuned for the patterns this engine relies on
 (reference analogue: kg-microbe's hand-rolled idioms, SURVEY.md §4):
 
 - AQE on, including skew-join splitting — the north rule names hub
@@ -9,8 +10,12 @@ the same plan behavior. Tuned for the patterns this engine relies on
   and triple-dedup shuffles are the skew surfaces.
 - Arrow on — every Python boundary in this engine is an Arrow-batched
   pandas UDF (no per-row Python anywhere, per BASELINE.json.input_hint).
-- shuffle partitions default sized for local[32]; a real cluster would set
-  this (or rely on AQE coalescing, which is enabled).
+- shuffle partitions default to max(2 × cores, 8) of the session's
+  parallelism; a real cluster would set this (or rely on AQE coalescing,
+  which is enabled), and a value given to spark-submit is kept.
+- the master is set only when the caller, ``SPARK_GRAFT_MASTER`` or
+  ``SPARK_GRAFT_CPUS`` names one; otherwise spark-submit's ``--master``
+  (or pyspark's ``local[*]``) applies.
 """
 
 from __future__ import annotations
@@ -18,6 +23,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding the kg_microbe_spark package (and __spark_entry__).
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -27,14 +35,16 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config."""
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+    master = master or os.environ.get("SPARK_GRAFT_MASTER")
+    if not master and os.environ.get("SPARK_GRAFT_CPUS"):
+        master = "local[%s]" % os.environ["SPARK_GRAFT_CPUS"]
+    b = SparkSession.builder.appName(app_name)
+    if master:
+        b = b.master(master)
+    if shuffle_partitions is not None:
+        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        b.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -53,23 +63,25 @@ def get_spark(
         # fit instead of always sort-merge — the engine's joins are
         # equi-joins whose build sides are bounded (dimension frames or
         # post-shuffle partitions), and SHJ skips both sorts. Production
-        # keeps the same setting; the per-partition build-side OOM risk is
-        # bounded by AQE partition sizing. Env-overridable for A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # keeps the same setting. AQE sizes partitions, but it cannot split
+        # one hot key on the build side: a hub key there is built into a
+        # single task's hash table (salting.salted_join is the remedy).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Let AQE rewrite a planned sort-merge join to shuffled-hash when
         # every post-shuffle partition is under this bound (default 0 =
         # off upstream; 64 MB matches the broadcast budget above).
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", str(64 * 1024 * 1024)),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Python workers import kg_microbe_spark whatever the working
+        # directory (Spark merges this with the inherited PYTHONPATH).
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    sc = spark.sparkContext
+    if shuffle_partitions is None and not sc.getConf().contains("spark.sql.shuffle.partitions"):
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(2 * sc.defaultParallelism, 8)))
+    return spark

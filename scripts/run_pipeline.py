@@ -2,13 +2,15 @@
 
 Cluster usage (north rule: spark-submit --py-files at N and 4N executors):
 
-    cd /root/repo && zip -qr /tmp/kgms.zip kg_microbe_spark
+    zip -qr /tmp/kgms.zip kg_microbe_spark      # from the repository root
     spark-submit --py-files /tmp/kgms.zip \
-        --conf spark.sql.adaptive.enabled=true \
-        --conf spark.sql.adaptive.skewJoin.enabled=true \
         scripts/run_pipeline.py \
         --pages-path <iceberg-or-parquet pages table> \
         --output /data/kg_out --checkpoint-dir /data/kg_ckpt --tau 0.0
+
+The session comes from ``kg_microbe_spark.session.get_spark`` (AQE, Arrow
+batch cap, UTC, ...); spark-submit's ``--master`` applies unless
+``--master`` is given here or SPARK_GRAFT_MASTER / SPARK_GRAFT_CPUS is set.
 
 Local smoke: python scripts/run_pipeline.py --n-pages 2000 --output /tmp/kg_out
 """
@@ -34,18 +36,12 @@ def main():
     ap.add_argument("--master", default=None, help="override master (default: spark-submit / env)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from kg_microbe_spark.plans.checkpoint import CheckpointManager
     from kg_microbe_spark.plans.pipeline import run_pipeline
+    from kg_microbe_spark.session import get_spark
     from kg_microbe_spark.sources.synthetic import lexicon_df, pages_df
 
-    builder = SparkSession.builder.appName("kg_microbe_spark_pipeline")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.config("spark.sql.adaptive.enabled", "true").config(
-        "spark.sql.adaptive.skewJoin.enabled", "true"
-    ).getOrCreate()
+    spark = get_spark(app_name="kg_microbe_spark_pipeline", master=args.master)
 
     pages = spark.read.parquet(args.pages_path) if args.pages_path else pages_df(spark, args.n_pages)
     ckpt = CheckpointManager(spark, args.checkpoint_dir) if args.checkpoint_dir else None

@@ -5,14 +5,15 @@ compare row counts, column names, and order-insensitive values."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-from pyspark.sql import SparkSession
+import duckdb  # noqa: E402
 
-import __spark_entry__ as entry_mod
+import __spark_entry__ as entry_mod  # noqa: E402
+from kg_microbe_spark.session import get_spark  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -49,14 +50,7 @@ def frame_sig(cols, rows):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("verify_entry")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="verify_entry")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in entry_mod.TABLES:

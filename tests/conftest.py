@@ -1,18 +1,10 @@
 import pytest
-from pyspark.sql import SparkSession
+
+from kg_microbe_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("kg_microbe_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    s = get_spark(app_name="kg_microbe_spark_tests", master="local[4]")
     yield s
     s.stop()

@@ -104,3 +104,46 @@ def test_concurrent_put_get_no_corruption():
         t.join()
     assert not errors
     assert len(cache) <= 8
+
+
+def test_stopwords_change_rebuilds_keyed_dimensions(spark):
+    """A second run_pipeline with the same dim_cache_key but other stopwords
+    must not serve the first run's stopword-filtered name index."""
+    from kg_microbe_spark.plans.pipeline import run_pipeline
+    from kg_microbe_spark.sources import synthetic
+
+    pages = synthetic.pages_df(spark, 60, num_partitions=2)
+    lexicon = synthetic.lexicon_df(spark)
+    stop = list(synthetic.STOPWORDS) + ["soil"]
+
+    def entities(res):
+        rows = {(r.url, r.curie, r.n_mentions) for r in res.entities.collect()}
+        res.entities.unpersist()
+        return rows
+
+    first = entities(run_pipeline(spark, pages, lexicon, dim_cache_key="stopwords-test"))
+    with pytest.warns(UserWarning, match="different input fingerprint"):
+        second = entities(run_pipeline(spark, pages, lexicon, stopwords=stop, dim_cache_key="stopwords-test"))
+    assert second == entities(run_pipeline(spark, pages, lexicon, stopwords=stop))
+    assert second != first
+
+
+def test_matcher_fingerprint_change_rebuilds_matcher(spark):
+    from kg_microbe_spark.operators.lexicon import build_name_index
+    from kg_microbe_spark.operators.mentions import scan_mentions
+    from kg_microbe_spark.sources import synthetic
+
+    pages = spark.createDataFrame([("u1", "growth on glucose in soil")], "url string, text string")
+    lexicon = synthetic.lexicon_df(spark)
+
+    def terms(stopwords):
+        idx = build_name_index(lexicon, stopwords)
+        found = scan_mentions(
+            pages, idx, max_broadcast_patterns=None,
+            matcher_cache_key="matcher-fp-test", matcher_fingerprint=",".join(stopwords),
+        )
+        return {r.term_norm for r in found.collect()}
+
+    assert terms([]) == {"glucose", "soil"}
+    with pytest.warns(UserWarning, match="different input fingerprint"):
+        assert terms(["soil"]) == {"glucose"}
