@@ -59,7 +59,7 @@ from kg_microbe_spark.caching import SessionVersionCache, destroy_broadcast
 _MATCHER_CACHE = SessionVersionCache(max_per_app=4, on_evict=destroy_broadcast)
 
 
-def _matcher_broadcast(spark, name_index: DataFrame, cache_key: str | None, fingerprint: str = ""):
+def _matcher_broadcast(spark, name_index: DataFrame, cache_key: str | None):
     def build():
         patterns: List[str] = [r.term_norm for r in name_index.select("term_norm").distinct().collect()]
         return spark.sparkContext.broadcast(build_matcher(patterns))
@@ -67,7 +67,7 @@ def _matcher_broadcast(spark, name_index: DataFrame, cache_key: str | None, fing
     return _MATCHER_CACHE.get_or_build(
         spark.sparkContext.applicationId,
         cache_key,
-        f"{name_index.schema.simpleString()}|{fingerprint}",
+        name_index.schema.simpleString(),
         build,
     )
 
@@ -78,7 +78,6 @@ def _scan_with_matcher(
     candidates_only: bool,
     matcher_cache_key: str | None = None,
     passthrough_cols: Sequence[str] = (),
-    matcher_fingerprint: str = "",
 ) -> DataFrame:
     """The single matcher-scan implementation — batch AND streaming callers
     share it (streaming passes ``passthrough_cols=("warc_ts",)`` to carry
@@ -88,7 +87,7 @@ def _scan_with_matcher(
     from pyspark.sql.types import StructType
 
     spark = extracted.sparkSession
-    bc = _matcher_broadcast(spark, name_index, matcher_cache_key, matcher_fingerprint)
+    bc = _matcher_broadcast(spark, name_index, matcher_cache_key)
     passthrough_cols = tuple(passthrough_cols)
     out_schema = StructType(
         MENTIONS_SCHEMA.fields + [extracted.schema[c] for c in passthrough_cols]
@@ -148,7 +147,6 @@ def scan_mentions(
     max_broadcast_patterns: int | None = MAX_BROADCAST_PATTERNS,
     matcher_cache_key: str | None = None,
     passthrough_cols: Sequence[str] = (),
-    matcher_fingerprint: str = "",
 ) -> DataFrame:
     """extracted(url,text,…) × name_index → mentions(url, surface,
     term_norm, start, end[, *passthrough_cols]). Offsets refer to the
@@ -161,9 +159,6 @@ def scan_mentions(
     ``matcher_cache_key``: optional dictionary-version key enabling
     session-scoped reuse of the built+broadcast matcher (see
     _MATCHER_CACHE); only pass it when the name index is version-stable.
-    ``matcher_fingerprint`` names what else the index was built from (the
-    pipeline passes its stopwords): a cached matcher recorded under a
-    different fingerprint is discarded and rebuilt.
 
     ``passthrough_cols``: extra input columns carried through per match
     (streaming uses this for event time — one scan implementation for
@@ -182,7 +177,6 @@ def scan_mentions(
         candidates_only=False,
         matcher_cache_key=matcher_cache_key,
         passthrough_cols=passthrough_cols,
-        matcher_fingerprint=matcher_fingerprint,
     )
 
 

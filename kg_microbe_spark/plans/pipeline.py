@@ -73,20 +73,16 @@ def _localize(spark: SparkSession, build, fingerprint: str, cache_key: Optional[
     ``build`` is a thunk: on a cache hit the dimension plan is never even
     constructed (building the name-index / synonym-enrichment *plans* costs
     0.2-0.4 s of driver py4j round trips per pipeline invocation). The
-    staleness fingerprint is everything the dimension is built from besides
-    the lexicon rows: the lexicon's schema, plus the stopwords for the
-    stopword-filtered dimensions — a key reused across a change of either
-    is discarded and rebuilt."""
+    staleness fingerprint is the lexicon's schema (the dimension's schema is
+    a pure function of builder + lexicon schema), so a key reused across a
+    lexicon schema change is discarded and rebuilt. Everything else a
+    dimension is built from (the stopwords) belongs in ``cache_key``."""
 
     def collect_local() -> DataFrame:
         df = build()
         return spark.createDataFrame(df.collect(), df.schema)
 
     return _DIM_CACHE.get_or_build(spark.sparkContext.applicationId, cache_key, fingerprint, collect_local)
-
-
-def _stop_cfg(stopwords: Sequence[str]) -> str:
-    return f"stop={','.join(sorted(stopwords))}"
 
 
 def _predicate_dims(spark: SparkSession) -> Tuple[DataFrame, DataFrame]:
@@ -129,7 +125,7 @@ def _collective_link(
     cand_index = _localize(
         lexicon.sparkSession,
         lambda: build_candidate_index(lexicon, stopwords),
-        f"{lexicon.schema.simpleString()}|{_stop_cfg(stopwords)}",
+        lexicon.schema.simpleString(),
         _k("cand_index"),
     )
     agg_m = mentions.groupBy("url", "term_norm").agg(
@@ -187,7 +183,7 @@ def run_pipeline(
     with the run config (tau, stopwords, pipeline version) and recorded per
     stage — a resume after the inputs or config changed recomputes instead
     of reading stale checkpoints."""
-    stop_cfg = _stop_cfg(stopwords)
+    stop_cfg = f"stop={','.join(sorted(stopwords))}"
     config_fp = (
         f"v{PIPELINE_VERSION}|tau={tau}|{stop_cfg}"
         f"|coll={int(collective_linking)}|in={input_fingerprint}"
@@ -211,11 +207,14 @@ def run_pipeline(
     # materializing it once stops every action from re-running the
     # normalize/window plan, exactly like the reference loading its
     # dimension data up front (bacdive.py:224-321).
+    # The stopword-filtered artifacts (name index, candidate index, matcher)
+    # are keyed by the stopwords too (_ks), so runs with different stopwords
+    # under one dim_cache_key each keep their own entries.
     _k = (lambda part: f"{dim_cache_key}/{part}") if dim_cache_key else (lambda part: None)
+    _ks = (lambda part: f"{dim_cache_key}|{stop_cfg}/{part}") if dim_cache_key else (lambda part: None)
     lex_fp = lexicon.schema.simpleString()
-    stop_fp = f"{lex_fp}|{stop_cfg}"
     name_index = _localize(
-        spark, lambda: build_name_index(lexicon, stopwords), stop_fp, _k("name_index")
+        spark, lambda: build_name_index(lexicon, stopwords), lex_fp, _ks("name_index")
     )
     xref_routing = _localize(
         spark, lambda: build_xref_routing(lexicon), lex_fp, _k("xref_routing")
@@ -239,11 +238,7 @@ def run_pipeline(
     mentions = stage(
         "s3_mentions",
         lambda: scan_mentions(
-            en_pages,
-            name_index,
-            max_broadcast_patterns=None,
-            matcher_cache_key=_k("matcher"),
-            matcher_fingerprint=stop_cfg,
+            en_pages, name_index, max_broadcast_patterns=None, matcher_cache_key=_ks("matcher")
         ),
     )
 
@@ -253,7 +248,7 @@ def run_pipeline(
     # two shuffles folded into one.
     if collective_linking:
         raw_linked = _collective_link(
-            mentions, lexicon, name_index, stopwords, _k
+            mentions, lexicon, name_index, stopwords, _ks
         )
     else:
         raw_linked = link_mentions(

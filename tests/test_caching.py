@@ -3,6 +3,7 @@ long-lived application from accumulating broadcasts/LocalRelations
 (VERDICT r4 next-round #7 / ADVICE rows 1 and 5)."""
 
 import threading
+import warnings
 
 import pytest
 
@@ -106,9 +107,20 @@ def test_concurrent_put_get_no_corruption():
     assert len(cache) <= 8
 
 
-def test_stopwords_change_rebuilds_keyed_dimensions(spark):
-    """A second run_pipeline with the same dim_cache_key but other stopwords
-    must not serve the first run's stopword-filtered name index."""
+def _entity_rows(res):
+    rows = {(r.url, r.curie, r.n_mentions) for r in res.entities.collect()}
+    res.entities.unpersist()
+    return rows
+
+
+def _cache_warnings(caught):
+    return [w for w in caught if "SessionVersionCache" in str(w.message)]
+
+
+def test_stopword_configs_give_distinct_results_under_one_key(spark):
+    """Two run_pipeline calls with one dim_cache_key but different stopwords
+    each get their own name index and matcher: no stale reuse, no warning,
+    and the first result (still lazy) keeps a live matcher broadcast."""
     from kg_microbe_spark.plans.pipeline import run_pipeline
     from kg_microbe_spark.sources import synthetic
 
@@ -116,34 +128,47 @@ def test_stopwords_change_rebuilds_keyed_dimensions(spark):
     lexicon = synthetic.lexicon_df(spark)
     stop = list(synthetic.STOPWORDS) + ["soil"]
 
-    def entities(res):
-        rows = {(r.url, r.curie, r.n_mentions) for r in res.entities.collect()}
-        res.entities.unpersist()
-        return rows
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        res_default = run_pipeline(spark, pages, lexicon, dim_cache_key="stopwords-test")
+        res_stop = run_pipeline(spark, pages, lexicon, stopwords=stop, dim_cache_key="stopwords-test")
+        default_rows = _entity_rows(res_default)
+        stop_rows = _entity_rows(res_stop)
+    assert not _cache_warnings(caught)
+    assert default_rows == _entity_rows(run_pipeline(spark, pages, lexicon))
+    assert stop_rows == _entity_rows(run_pipeline(spark, pages, lexicon, stopwords=stop))
+    assert stop_rows != default_rows
 
-    first = entities(run_pipeline(spark, pages, lexicon, dim_cache_key="stopwords-test"))
-    with pytest.warns(UserWarning, match="different input fingerprint"):
-        second = entities(run_pipeline(spark, pages, lexicon, stopwords=stop, dim_cache_key="stopwords-test"))
-    assert second == entities(run_pipeline(spark, pages, lexicon, stopwords=stop))
-    assert second != first
 
-
-def test_matcher_fingerprint_change_rebuilds_matcher(spark):
-    from kg_microbe_spark.operators.lexicon import build_name_index
-    from kg_microbe_spark.operators.mentions import scan_mentions
+def test_alternating_stopwords_build_each_config_once(spark, monkeypatch):
+    """Alternating two stopword lists under one dim_cache_key builds each
+    list's name index and matcher once; later calls hit the cache."""
+    from kg_microbe_spark.operators import mentions
+    from kg_microbe_spark.plans import pipeline
     from kg_microbe_spark.sources import synthetic
 
-    pages = spark.createDataFrame([("u1", "growth on glucose in soil")], "url string, text string")
+    builds = {"name_index": 0, "matcher": 0}
+
+    def counting(name, fn):
+        def wrapped(*args, **kwargs):
+            builds[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(pipeline, "build_name_index", counting("name_index", pipeline.build_name_index))
+    monkeypatch.setattr(mentions, "build_matcher", counting("matcher", mentions.build_matcher))
+
+    pages = synthetic.pages_df(spark, 40, num_partitions=2)
     lexicon = synthetic.lexicon_df(spark)
-
-    def terms(stopwords):
-        idx = build_name_index(lexicon, stopwords)
-        found = scan_mentions(
-            pages, idx, max_broadcast_patterns=None,
-            matcher_cache_key="matcher-fp-test", matcher_fingerprint=",".join(stopwords),
-        )
-        return {r.term_norm for r in found.collect()}
-
-    assert terms([]) == {"glucose", "soil"}
-    with pytest.warns(UserWarning, match="different input fingerprint"):
-        assert terms(["soil"]) == {"glucose"}
+    configs = [tuple(synthetic.STOPWORDS), tuple(synthetic.STOPWORDS) + ("soil",)]
+    results = {}
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for stop in configs + configs:
+            res = pipeline.run_pipeline(spark, pages, lexicon, stopwords=stop, dim_cache_key="alternate-test")
+            results.setdefault(stop, []).append(_entity_rows(res))
+    assert not _cache_warnings(caught)
+    assert builds == {"name_index": 2, "matcher": 2}
+    assert all(first == again for first, again in results.values())
+    assert results[configs[0]][0] != results[configs[1]][0]

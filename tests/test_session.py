@@ -1,10 +1,14 @@
 """Every session is built by ``kg_microbe_spark.session.get_spark``: the test
-fixture carries the engine's settings, and the oracle script's Python
-workers import the package from any working directory."""
+fixture carries the engine's settings, the master and shuffle-partition
+rules hold for a fresh session, and the oracle script's Python workers
+import the package from any working directory."""
 
+import json
 import os
 import subprocess
 import sys
+
+import pytest
 
 from kg_microbe_spark.session import PACKAGE_ROOT
 
@@ -21,6 +25,43 @@ def test_fixture_session_carries_engine_settings(spark):
     # max(2 x cores, 8) at local[4]
     assert conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH") == PACKAGE_ROOT == ROOT
+
+
+_SESSION_PROBE = (
+    "import json\n"
+    "from kg_microbe_spark.session import get_spark\n"
+    "s = get_spark()\n"
+    "print(json.dumps([s.sparkContext.master, s.conf.get('spark.sql.shuffle.partitions')]))\n"
+    "s.stop()\n"
+)
+
+
+@pytest.mark.parametrize(
+    "env, expected",
+    [
+        # SPARK_GRAFT_MASTER names the master; partitions = max(2 x 6, 8)
+        ({"SPARK_GRAFT_MASTER": "local[6]"}, ["local[6]", "12"]),
+        # nothing names a master: spark-submit's --master applies
+        ({"PYSPARK_SUBMIT_ARGS": "--master local[5] pyspark-shell"}, ["local[5]", "10"]),
+        # a partition count given to spark-submit is kept
+        (
+            {"PYSPARK_SUBMIT_ARGS": "--master local[2] --conf spark.sql.shuffle.partitions=5 pyspark-shell"},
+            ["local[2]", "5"],
+        ),
+    ],
+)
+def test_get_spark_master_and_shuffle_partitions(env, expected):
+    base = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_CPUS", "PYSPARK_SUBMIT_ARGS")
+    }
+    base.update(env, PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="1g", PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _SESSION_PROBE], env=base, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == expected
 
 
 def test_python_udf_entry_verifies_outside_the_repo(tmp_path):
