@@ -29,6 +29,8 @@ _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
+from kg_microbe_spark.session import local_frame  # noqa: E402
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 TABLES = [
@@ -75,7 +77,7 @@ def _local_result(df: DataFrame) -> DataFrame:
     finally-rmtree would pull the parquet/TSV out from under the scan.
     Only round-trip entries (kgx/tar/jsonl/neo4j/streaming — dimension-
     scale frames) use this; fact-table entries never collect."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+    return local_frame(df.sparkSession, df.toArrow(), df.schema)
 
 
 # ===========================================================================
@@ -10696,8 +10698,8 @@ def q_greedy_set_cover(spark, sf_dir):
         ).alias("item"),
     )
     rows = greedy_set_cover(d, "doc_id", "item", k=5)
-    return spark.createDataFrame(
-        rows, "rank int, doc_id string, marginal_gain long, covered_total long"
+    return local_frame(
+        spark, rows, "rank int, doc_id string, marginal_gain long, covered_total long"
     )
 
 

@@ -23,6 +23,8 @@ from typing import Sequence, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg_microbe_spark.session import local_frame
+
 # Same pattern text on the Spark and DuckDB sides (RE2-safe: no
 # lookarounds, non-capturing groups only — see docs/ORACLE notes).
 _NUM_RE = r"^\s*([+-]?[0-9]+(?:\.[0-9]+)?)"
@@ -61,7 +63,7 @@ def range_table(
     spark: SparkSession, bins: Sequence[Tuple[float, float, str]]
 ) -> DataFrame:
     """Curated bin table (lo, hi, label); half-open [lo, hi)."""
-    return spark.createDataFrame(list(bins), "lo double, hi double, label string")
+    return local_frame(spark, list(bins), "lo double, hi double, label string")
 
 
 def classify_binned(

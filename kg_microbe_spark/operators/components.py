@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kg_microbe_spark.session import local_frame
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edge list → canonical (u < v), self-loops dropped."""
@@ -279,7 +281,7 @@ def luby_mis(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    winners = spark.createDataFrame([], all_nodes.schema)
+    winners = local_frame(spark, [], all_nodes.schema)
     cur = und
     for r in range(max_rounds):
         if cur.isEmpty():

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kg_microbe_spark.functions.text import tokens_col
+from kg_microbe_spark.session import local_frame
 
 
 def _mg_candidates(df_text: DataFrame, capacity: int) -> DataFrame:
@@ -85,7 +86,7 @@ def frequent_tokens(
     src = docs.select(F.col(text_col).alias("text"))
     candidates = [r.token for r in _mg_candidates(src, capacity).distinct().collect()]
     if not candidates:
-        return docs.sparkSession.createDataFrame([], "token string, n long")
+        return local_frame(docs.sparkSession, [], "token string, n long")
     tok = src.select(F.explode(tokens_col(F.col("text"))).alias("token"))
     counted = (
         tok.filter(F.col("token").isin(candidates))

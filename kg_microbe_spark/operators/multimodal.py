@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kg_microbe_spark.session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -261,4 +263,4 @@ def synthetic_media_df(spark, n: int = 64) -> DataFrame:
         payload = hashlib.sha256(f"media-{i}".encode()).digest() * (1 + i % 5)
         kind = ["image", "audio", "video"][i % 3]
         rows.append((i, kind, bytearray(payload), f"application/x-fake-{kind}", 64, 64, 1.5))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -27,6 +27,8 @@ from typing import Dict, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kg_microbe_spark.session import local_frame
+
 # 10000 buckets → 0.01% split granularity; small enough that the
 # 60-bit hash's modulo bias is ~5e-15, far below any split tolerance.
 RESOLUTION = 10_000
@@ -326,7 +328,7 @@ def greedy_set_cover(
         .localCheckpoint(eager=True)
     )
     spark = df.sparkSession
-    covered = spark.createDataFrame([], "_item string")
+    covered = local_frame(spark, [], "_item string")
     out = []
     total = 0
     for rank in range(1, k + 1):

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kg_microbe_spark.session import local_frame
+
 
 def _prefix(col):
     return F.split(col, ":")[0]
@@ -87,7 +89,7 @@ def group_quantiles(
         F.count("*").over(Window.partitionBy(*key_cols)).alias("_n"),
     )
     spark = df.sparkSession
-    qdf = F.broadcast(spark.createDataFrame([(q,) for q in qs], "q double"))
+    qdf = F.broadcast(local_frame(spark, [(q,) for q in qs], "q double"))
     return (
         ranked.crossJoin(qdf)
         .filter(F.col("_rk") == F.ceil(F.col("q") * F.col("_n")))

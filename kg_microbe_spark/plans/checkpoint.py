@@ -13,19 +13,28 @@ Iceberg jars, so the same contract is implemented over parquet:
 - every publish appends per-partition lineage rows (stage, partition_id,
   input_fingerprint, row_count, wall_time) to a ``_lineage`` table — the
   north rule's "per-partition lineage + metrics checkpointed" requirement.
+  A partition is one write task: ``partition_id`` is the NNNNN of its
+  ``part-NNNNN`` file(s) and ``row_count`` is summed from their parquet
+  footers, so recording lineage never rescans the stage.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time
 import uuid
+from collections import Counter
 from typing import Callable, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kg_microbe_spark.schemas import LINEAGE_SCHEMA
+from kg_microbe_spark.session import local_frame
+
+# Spark's data-file name: part-<write task's partition id>-<job uuid>...
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 class CheckpointManager:
@@ -78,18 +87,19 @@ class CheckpointManager:
             with open(os.path.join(self.stage_path(stage), "_FINGERPRINT"), "w") as f:
                 f.write(input_fingerprint)
         out = self.read(stage)
-        lineage = (
-            out.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("row_count"))
-            .select(
-                F.lit(stage).alias("stage"),
-                F.col("partition_id"),
-                F.lit(input_fingerprint).alias("input_fingerprint"),
-                F.col("row_count"),
-                F.lit(float(wall)).alias("wall_time_sec"),
-                F.lit(self.run_id).alias("run_id"),
-            )
+        row_counts = Counter()
+        for name in os.listdir(self.stage_path(stage)):
+            m = _PART_FILE.match(name)
+            if m:
+                path = os.path.join(self.stage_path(stage), name)
+                row_counts[int(m.group(1))] += pq.read_metadata(path).num_rows
+        lineage = local_frame(
+            self.spark,
+            [
+                (stage, part, input_fingerprint, n, float(wall), self.run_id)
+                for part, n in sorted(row_counts.items())
+            ],
+            LINEAGE_SCHEMA,
         )
         lineage.write.mode("append").parquet(self.lineage_path)
         return out
@@ -104,4 +114,4 @@ class CheckpointManager:
     def lineage(self) -> DataFrame:
         if os.path.exists(self.lineage_path):
             return self.spark.read.parquet(self.lineage_path)
-        return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        return local_frame(self.spark, [], LINEAGE_SCHEMA)

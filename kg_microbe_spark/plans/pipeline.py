@@ -27,6 +27,7 @@ from kg_microbe_spark.operators.triples import (
     split_pairs,
 )
 from kg_microbe_spark.plans.checkpoint import CheckpointManager
+from kg_microbe_spark.session import local_frame
 from kg_microbe_spark.sources import synthetic
 
 # Bump when a stage's semantics change — stale checkpoints from an older
@@ -47,15 +48,16 @@ class PipelineResult:
 
 # Session-scoped dimension cache: (applicationId, caller-supplied version
 # key) → localized frame. Rebuilding the lexicon dimensions is pure
-# DRIVER-SIDE serial time (collect + createDataFrame + matcher build)
+# DRIVER-SIDE serial time (Arrow collect + local_frame + matcher build)
 # repeated identically on every pipeline invocation — on a cluster the
 # broadcast dimension is built once per dictionary VERSION and reused
 # across jobs/micro-batches (exactly what Structured Streaming does with a
 # static dimension), so the engine does the same here. The key is explicit
 # (e.g. the lexicon's Iceberg snapshot id): plan hashes cannot serve —
-# semanticHash is not stable across createDataFrame instantiations of
-# identical data — and an implicit key risks silent staleness; with an
-# explicit version the contract is the caller's, as in any dimension cache.
+# a file-backed lexicon's semanticHash covers its path, not its contents,
+# so a rewritten table would hash the same — and an implicit key risks
+# silent staleness; with an explicit version the contract is the
+# caller's, as in any dimension cache.
 # LRU-bounded per application (dictionary-version churn in a long-lived
 # session must not accumulate LocalRelations) and lock-guarded against
 # concurrent pipeline invocations; the input schema is fingerprinted into
@@ -65,10 +67,13 @@ _DIM_CACHE = SessionVersionCache(max_per_app=16)
 
 
 def _localize(spark: SparkSession, build, fingerprint: str, cache_key: Optional[str]) -> DataFrame:
-    """Collect the small dimension frame ``build()`` returns and rebuild it
-    as a LocalRelation (constant-folded into every consuming plan; no
-    recompute, free broadcast). Only valid for genuinely small frames.
-    Cached per (session, cache_key) when a key is given — see _DIM_CACHE.
+    """Collect the small dimension frame ``build()`` returns as Arrow and
+    rebuild it as a LocalRelation (``local_frame``: a ``LocalTableScan``,
+    constant-folded into every consuming plan; no recompute, free
+    broadcast, and no Python worker on any job that reads it — the rows
+    never pass through Python ``Row`` objects or a pickled RDD). Only valid
+    for genuinely small frames. Cached per (session, cache_key) when a key
+    is given — see _DIM_CACHE.
 
     ``build`` is a thunk: on a cache hit the dimension plan is never even
     constructed (building the name-index / synonym-enrichment *plans* costs
@@ -80,17 +85,19 @@ def _localize(spark: SparkSession, build, fingerprint: str, cache_key: Optional[
 
     def collect_local() -> DataFrame:
         df = build()
-        return spark.createDataFrame(df.collect(), df.schema)
+        return local_frame(spark, df.toArrow(), df.schema)
 
     return _DIM_CACHE.get_or_build(spark.sparkContext.applicationId, cache_key, fingerprint, collect_local)
 
 
 def _predicate_dims(spark: SparkSession) -> Tuple[DataFrame, DataFrame]:
-    curated = spark.createDataFrame(
+    curated = local_frame(
+        spark,
         [(s, o, p, r) for (s, o), (p, r) in sorted(synthetic.curated_pair_predicates().items())],
         "subject string, object string, predicate string, relation string",
     )
-    defaults = spark.createDataFrame(
+    defaults = local_frame(
+        spark,
         [(sc, oc, p, r) for (sc, oc), (p, r) in sorted(synthetic.CATEGORY_DEFAULT_PREDICATES.items())],
         "subject_category string, object_category string, predicate string, relation string",
     )
@@ -206,7 +213,9 @@ def run_pipeline(
     # several downstream plans (pattern collect, link join, routing join) —
     # materializing it once stops every action from re-running the
     # normalize/window plan, exactly like the reference loading its
-    # dimension data up front (bacdive.py:224-321).
+    # dimension data up front (bacdive.py:224-321). _localize ships the
+    # collected rows back as Arrow (session.local_frame), so each dimension
+    # is a LocalTableScan and no job that reads it starts a Python worker.
     # The stopword-filtered artifacts (name index, candidate index, matcher)
     # are keyed by the stopwords too (_ks), so runs with different stopwords
     # under one dim_cache_key each keep their own entries.

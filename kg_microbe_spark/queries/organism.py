@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg_microbe_spark.session import local_frame
+
 
 def register_views(spark: SparkSession, nodes: DataFrame, edges: DataFrame) -> None:
     nodes.createOrReplaceTempView("nodes")
@@ -153,9 +155,7 @@ def media_composition(spark: SparkSession, medium_ids) -> DataFrame:
     session-global temp view (a shared view name would let concurrent or
     nested calls on one SparkSession clobber each other's id lists before
     the lazy query executes, and would leak after the call)."""
-    ids = spark.createDataFrame([(m,) for m in medium_ids] or [(None,)], "medium_id string").filter(
-        "medium_id IS NOT NULL"
-    )
+    ids = local_frame(spark, [(m,) for m in medium_ids], "medium_id string")
     edges = spark.table("edges")
     nodes = spark.table("nodes")
     return (

@@ -16,13 +16,22 @@ gets the same plan behavior. Tuned for the patterns this engine relies on
 - the master is set only when the caller, ``SPARK_GRAFT_MASTER`` or
   ``SPARK_GRAFT_CPUS`` names one; otherwise spark-submit's ``--master``
   (or pyspark's ``local[*]``) applies.
+
+``local_frame`` is the only way the package turns driver-side data into a
+DataFrame: it ships the rows as Arrow, so the frame is a LocalRelation
+(``LocalTableScan``) rather than a scan over a parallelized, pickled
+Python RDD whose every job starts Python workers.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Sequence, Union
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # The directory holding the kg_microbe_spark package (and __spark_entry__).
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -85,3 +94,26 @@ def get_spark(
     if shuffle_partitions is None and not sc.getConf().contains("spark.sql.shuffle.partitions"):
         spark.conf.set("spark.sql.shuffle.partitions", str(max(2 * sc.defaultParallelism, 8)))
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Union[Sequence[Sequence], pa.Table], schema: Union[StructType, str]
+) -> DataFrame:
+    """A LocalRelation holding ``rows`` (tuples or Rows in ``schema``'s
+    column order, or an Arrow table such as ``df.toArrow()``) under
+    ``schema`` (a StructType or a DDL string), nullability included.
+
+    ``createDataFrame`` of a Python list builds ``Scan ExistingRDD`` over a
+    parallelized RDD, and every job that scans it runs Python-worker tasks
+    to unpickle the rows. An Arrow table becomes a ``LocalTableScan``
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+        rows = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(rows, schema)

@@ -308,12 +308,13 @@ def iter_pages(n: int) -> Iterator[Dict]:
 
 def lexicon_df(spark):
     from kg_microbe_spark.schemas import LEXICON_SCHEMA
+    from kg_microbe_spark.session import local_frame
 
     rows = [
         (r["curie"], r["label"], r["synonyms"], r["category"], r["xrefs"], r["deprecated"])
         for r in build_lexicon()
     ]
-    return spark.createDataFrame(rows, LEXICON_SCHEMA)
+    return local_frame(spark, rows, LEXICON_SCHEMA)
 
 
 def pages_df(spark, n: int, num_partitions: Optional[int] = None):

@@ -35,6 +35,29 @@ def test_stage_idempotent_resume(spark, tmp_path):
     assert all(r.run_id == "r1" for r in lineage)
 
 
+def test_lineage_partitions_are_write_tasks(spark, tmp_path):
+    """One lineage row per write task: partition_id is the task's part
+    number and row_count its rows, read from the parquet footers."""
+    cm = CheckpointManager(spark, str(tmp_path / "ckparts"), run_id="r1")
+    cm.run_stage("four", lambda: spark.range(0, 100, numPartitions=4))
+    rows = sorted((r.partition_id, r.row_count) for r in cm.lineage().collect())
+    assert rows == [(0, 25), (1, 25), (2, 25), (3, 25)]
+
+
+def test_pipeline_lineage_counts_match_stages(spark, tmp_path):
+    """Each stage's lineage rows sum to the rows its checkpoint holds."""
+    pages = synthetic.pages_df(spark, 40, num_partitions=2)
+    cm = CheckpointManager(spark, str(tmp_path / "cklin"), run_id="r1")
+    run_pipeline(spark, pages, synthetic.lexicon_df(spark), checkpoint=cm).triples.count()
+    per_stage = {}
+    for r in cm.lineage().collect():
+        per_stage.setdefault(r.stage, []).append(r)
+    assert set(per_stage) == {"s1_extract", "s3_mentions", "s5_entities", "s6_edges", "s7_edges_merged", "s7_nodes_merged"}
+    for stage, rows in per_stage.items():
+        assert len({r.partition_id for r in rows}) == len(rows)
+        assert sum(r.row_count for r in rows) == cm.read(stage).count(), stage
+
+
 def test_stale_checkpoint_invalidated_by_fingerprint(spark, tmp_path):
     """A checkpoint published under one input fingerprint must NOT satisfy
     a resume under a different one (input/config/code changed) — round-1
